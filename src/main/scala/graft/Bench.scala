@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import scala.util.control.NonFatal
 
 /** Benchmark main. Protocol (round 7): the recorded artifact must be
@@ -77,7 +76,6 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val runs = sys.env.get("SPARK_GRAFT_BENCH_RUNS")
       .flatMap(s => scala.util.Try(s.trim.toInt).toOption).getOrElse(3).max(1)
     val warmups = sys.env.get("SPARK_GRAFT_BENCH_WARMUPS")
@@ -95,41 +93,7 @@ object Bench {
       Thread.sleep(30000L); retries += 1; loadStart = loadavg()
     }
     val contaminated = loadStart > guard
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      // The generated-class cache (static conf, default 100 entries) thrashes
-      // on a 300+-query surface: every pass re-runs Janino on every stage.
-      // Scale-independent JVM warmup hygiene, not a local[32] tune — the
-      // cache is keyed by generated source, so correctness is unaffected.
-      // Parameterised for A/B (SPARK_GRAFT_CODEGEN_CACHE=100 reproduces the
-      // old behaviour).
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "8192"))
-      // Whole-stage codegen silently disables for plans wider than 100
-      // fields (default spark.sql.codegen.maxFields), dropping the wide
-      // moment/correlation aggregates (q17: 144 sums, r76: 136) to the
-      // interpreted path. Width of a plan is scale-independent; Janino's
-      // own per-method bytecode limit (hugeMethodLimit) still bails out
-      // gracefully if a generated method ever gets too big.
-      .config("spark.sql.codegen.maxFields",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_MAXFIELDS", "1024"))
-      // NOT set: spark.sql.join.preferSortMergeJoin=false was A/B'd over
-      // the 60 heaviest queries (OPTIMIZATION_r12.md) — net zero at this
-      // scale, and sort-merge is the safer default for 100 TB build sides.
-      // fresh warehouse per JVM: bucketed saveAsTable must not land in cwd
-      // nor collide with a previous run's in-memory-catalog leftovers
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(Session.cpus)
     // warm the session (codegen, parquet footers, shuffle machinery) so the
     // first measured query doesn't absorb startup cost
     spark.range(1000).selectExpr("sum(id)").collect()

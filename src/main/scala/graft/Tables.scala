@@ -38,9 +38,12 @@ object Tables {
     * keeps the documented precondition honest (ADVICE r12): under AQE, a
     * probe on an exchange-containing plan executes the upstream stages;
     * the narrow-chain check guarantees the cached path is scan-only, and
-    * callers passing non-scan inputs simply keep the old behavior. */
+    * callers passing non-scan inputs simply keep the old behavior. A
+    * partitioned table is never cached: partition pruning makes the split
+    * count depend on the filter, not only on the root paths. The key holds
+    * the session's UUID, not the session, so the cache pins no session. */
   private val scanParts =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), Integer]
+    new java.util.concurrent.ConcurrentHashMap[(String, String), Integer]
   private def inputPartitions(df: DataFrame): Int = {
     import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project, SubqueryAlias}
     import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
@@ -55,9 +58,10 @@ object Tables {
     val cached: Option[Int] =
       if (narrow(plan)) plan.collectLeaves() match {
         case Seq(l: LogicalRelation) => l.relation match {
-          case h: HadoopFsRelation =>
+          case h: HadoopFsRelation if h.partitionSchema.isEmpty =>
             val conf = df.sparkSession.sessionState.conf
-            val key = (df.sparkSession,
+            val key = (
+              org.apache.spark.sql.graftbridge.Bridge.sessionUUID(df.sparkSession),
               h.location.rootPaths.mkString(",") +
                 s"|${conf.filesMaxPartitionBytes}|${conf.filesOpenCostInBytes}" +
                 s"|${conf.filesMinPartitionNum}" +

@@ -1,32 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      // reference semantics: Spark-3/Databricks non-ANSI (bad cast → NULL)
-      .config("spark.sql.ansi.enabled", "false")
-      // match Bench's codegen posture (see Bench.scala): keep wide
-      // moment/correlation aggregates on the codegen path and the
-      // generated-class cache sized to the query surface
-      .config("spark.sql.codegen.cache.maxEntries", "8192")
-      .config("spark.sql.codegen.maxFields", "1024")
-      // fresh warehouse per JVM: bucketed saveAsTable must not land in cwd
-      // nor collide with a previous run's in-memory-catalog leftovers
-      .config("spark.sql.warehouse.dir",
-        Files.createTempDirectory("graft-warehouse").toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(Session.cpus)
     new java.io.File(outDir).mkdirs()
     // optional subset for local iteration (same contract as Bench)
     val only = sys.env.get("SPARK_GRAFT_ONLY")

@@ -1,6 +1,6 @@
 package graft.sources
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption, StandardOpenOption}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.nio.charset.StandardCharsets
 import java.util.UUID
 
@@ -31,11 +31,11 @@ import scala.jdk.CollectionConverters._
   *
   * Commit protocol: stage part files under a per-commit UUID prefix, build
   * the manifest (overwrite/merge → checkpoint of staged files; append /
-  * compact → delta), then `CREATE_NEW` the next version file. A losing
-  * concurrent committer gets FileAlreadyExists, re-resolves the new head,
-  * rebuilds its delta (append re-reads ONE raw manifest; overwrite needs
-  * nothing) and retries — optimistic concurrency, winner decided by the
-  * filesystem's atomic create.
+  * compact → delta), then hard-link the fully written manifest in as the
+  * next version file. A losing concurrent committer gets
+  * FileAlreadyExists, re-resolves the new head, rebuilds its delta (append
+  * re-reads ONE raw manifest; overwrite needs nothing) and retries —
+  * optimistic concurrency, winner decided by the filesystem's atomic link.
   *
   * Scale note: on a local/HDFS filesystem `Files.move` is a rename; the
   * manifest lists RELATIVE paths so the table directory is relocatable. A
@@ -1684,14 +1684,16 @@ object SnapshotTable {
         s"stats=$f;$c;${java.lang.Double.toString(mn)};${java.lang.Double.toString(mx)}" }
     }
 
-  private def atomicCreate(root: String, v: Int, body: String): Int =
-    try {
-      Files.write(manifestPath(root, v), body.getBytes(StandardCharsets.UTF_8),
-        StandardOpenOption.CREATE_NEW)
-      v
-    } catch {
-      case _: java.nio.file.FileAlreadyExistsException => -1
-    }
+  /** The manifest is written in full to a temp file, then hard-linked into
+    * place: the link fails if the version exists (the commit CAS) and a
+    * concurrent reader never sees a created-but-unwritten manifest. */
+  private def atomicCreate(root: String, v: Int, body: String): Int = {
+    val tmp = manifestDir(root).resolve(s"_v$v.${UUID.randomUUID()}.tmp")
+    Files.write(tmp, body.getBytes(StandardCharsets.UTF_8))
+    try { Files.createLink(manifestPath(root, v), tmp); v }
+    catch { case _: java.nio.file.FileAlreadyExistsException => -1 }
+    finally Files.delete(tmp)
+  }
 
   private def dvLines(dvs: Map[String, Seq[String]]): Seq[String] =
     dvs.toSeq.sortBy(_._1).flatMap { case (f, ss) => ss.map(s => s"dv=$f;$s") }

@@ -129,25 +129,15 @@ object Search {
     val spark = docs.sparkSession
     import spark.implicits._
     // the two retrievers are INDEPENDENT bounded protocols over different
-    // tables — run their collects as concurrent Spark jobs (guide §2.6:
-    // actions are only sequential because the driver calls them
-    // sequentially). Each leg's lineage is untouched, so both lists are
-    // bit-identical to the sequential run.
-    val (lexIds, denseIds) = {
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      import scala.concurrent.duration.Duration
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-      implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-      val lexF = Future(bm25TopK(docs, idCol, textCol, queryTerms, kPerList)
-        .select(col(idCol).cast("long")).as[Long].collect())
-      val denseF = Future(graft.sim.Embeddings.bruteForceTopKAgg(
+    // tables — their collects run as concurrent Spark jobs (guide §2.6)
+    val Seq(lexIds, denseIds) = graft.Tables.concurrently(Seq(
+      () => bm25TopK(docs, idCol, textCol, queryTerms, kPerList)
+        .select(col(idCol).cast("long")).as[Long].collect(),
+      () => graft.sim.Embeddings.bruteForceTopKAgg(
           emb, vecIdCol, vecCol,
           emb.where(col(vecIdCol) === queryVecId), vecIdCol, vecCol, kPerList)
         .orderBy(col("rank").asc)
-        .select(col("corpus_id")).as[Long].collect())
-      try (Await.result(lexF, Duration.Inf), Await.result(denseF, Duration.Inf))
-      finally pool.shutdown()
-    }
+        .select(col("corpus_id")).as[Long].collect()))
     val lexRank = lexIds.zipWithIndex.map { case (id, i) => id -> (i + 1L) }.toMap
     val denseRank = denseIds.zipWithIndex.map { case (id, i) => id -> (i + 1L) }.toMap
     val fused = (lexRank.keySet ++ denseRank.keySet).toSeq

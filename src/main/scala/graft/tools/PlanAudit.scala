@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.window.WindowExec
 
 /** Whole-surface plan audit: for every `SparkEntry` query, count loop
@@ -94,15 +93,7 @@ object PlanAudit {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local(graft.Session.cpus)
     val loops = scala.collection.mutable.ArrayBuffer[String]()
     val globals = scala.collection.mutable.ArrayBuffer[String]()
     graft.SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>

@@ -1,12 +1,12 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Full-star-schema scale-up generator: replicate EVERY fact table of a
   * source SF directory `replicas`× (default 10× ⇒ sf0.1 → sf1) with
-  * consistent id offsets, so the whole 100-query surface — not just the
-  * hand-picked rehearsal trio — can run a BENCH-protocol pass at 10× data
+  * consistent id offsets, so the whole query surface — not just a
+  * hand-picked few — can run a BENCH-protocol pass at 10× data
   * (`BENCH_SF1_r08.json`).
   *
   * Semantics preserved:
@@ -17,13 +17,15 @@ import org.apache.spark.sql.functions._
   *    replica i of `customer` (same offset multiple), `lineitem` at its
   *    replica's orders/part/supplier — join fan-outs scale linearly, never
   *    quadratically.
-  *  - `documents` replicas carry the ScaleRehearsal suffix perturbation:
-  *    every source doc becomes a `replicas`-member near-dup CLIQUE — the
-  *    deliberately adversarial density for LSH band buckets.
-  *  - `embeddings` replicas get small deterministic per-dim noise (same
-  *    formula as ScaleRehearsal), forming vector near-dup cliques.
-  *  - `events.ts` is read raw (nanosAsLong) and written as the long it is;
-  *    `Tables.events` normalizes either representation.
+  *  - `documents` replica i > 0 appends the suffix `" rehearsal replica i"`
+  *    to the text: every source doc becomes a `replicas`-member near-dup
+  *    CLIQUE — the deliberately adversarial density for LSH band buckets.
+  *  - `embeddings` replica i > 0 adds deterministic per-dim noise
+  *    `(((vec_id·i + j) mod 13) − 6) / 400` to dimension j, forming vector
+  *    near-dup cliques.
+  *  - `events.ts` is written back as the session reads it (a raw long for
+  *    TIMESTAMP(NANOS) files under nanosAsLong); `Tables.events`
+  *    normalizes either representation.
   *
   * Replica 0 is the identity, so the scaled dir is a superset of the
   * source. Output goes OUTSIDE the repo (default java.io.tmpdir); this is
@@ -36,16 +38,7 @@ object ScaleUp {
     val out = if (args.length > 1) args(1)
       else sys.props("java.io.tmpdir") + "/graft-sf1-full"
     val replicas = if (args.length > 2) args(2).toInt else 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local(graft.Session.cpus)
 
     if (java.nio.file.Files.exists(
         java.nio.file.Paths.get(out, "embeddings.parquet", "_SUCCESS"))) {

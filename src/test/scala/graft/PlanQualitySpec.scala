@@ -19,6 +19,14 @@ class PlanQualitySpec extends SparkSpec {
     q.queryExecution.executedPlan.toString
   }
 
+  test("the test session plans under graft.Session's confs") {
+    val keys = Seq("spark.sql.codegen.maxFields",
+      "spark.sql.codegen.cache.maxEntries", "spark.sql.ansi.enabled",
+      "spark.sql.parquet.inferTimestampNTZ.enabled",
+      "spark.sql.legacy.parquet.nanosAsLong")
+    assert(keys.map(spark.conf.get) == keys.map(Session.confs))
+  }
+
   test("p1: filter and projection push into the parquet scan") {
     val p = plan("p1_project_filter")
     assert(p.contains("PushedFilters: [IsNotNull") &&

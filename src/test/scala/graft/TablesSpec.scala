@@ -37,6 +37,29 @@ class TablesSpec extends SparkSpec {
       assert(out2.rdd.getNumPartitions == exact)
   }
 
+  test("spreadIfNarrow decides per partition-pruned scan, not per table") {
+    val dir = java.nio.file.Files.createTempDirectory("tables-spec").toString
+    val path = s"$dir/p.parquet"
+    // one small file per partition value: the unfiltered scan has one
+    // split per file, the pruned scan a single split
+    spark.range(4000).selectExpr("id", "id % 4 AS part", "CAST(id AS DOUBLE) AS v")
+      .repartition(1, col("part"))
+      .write.partitionBy("part").parquet(path)
+    val target = spark.sparkContext.defaultParallelism
+    def decide(df: org.apache.spark.sql.DataFrame): Unit = {
+      val exact = df.rdd.getNumPartitions
+      val want = if (exact * 2 < target) target else exact
+      assert(Tables.spreadIfNarrow(df).rdd.getNumPartitions == want,
+        s"exact probe $exact, target $target")
+    }
+    val all = spark.read.parquet(path).select(col("v"))
+    val pruned = spark.read.parquet(path).where(col("part") === 1).select(col("v"))
+    assert(all.rdd.getNumPartitions * 2 >= target &&
+      pruned.rdd.getNumPartitions * 2 < target, "fixture must straddle the gate")
+    decide(all)
+    decide(pruned)
+  }
+
   test("spread helpers fall back to the exact probe on non-scan input") {
     val path = writeTable(rows = 1000, parts = 1)
     // an aggregate is NOT a narrow scan chain — the helper must still

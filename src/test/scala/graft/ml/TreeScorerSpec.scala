@@ -53,6 +53,32 @@ class TreeScorerSpec extends SparkSpec {
     assert(both.where(col("s_col") =!= col("s_sql")).count() == 0)
   }
 
+  test("localCheckpoint pin leaves the m21 learning-curve trees unchanged") {
+    // the m4/m21/m23 input pin is fit-safe only if the checkpoint keeps
+    // the same partitions in the same row order: MLlib's findSplits
+    // sampling is a function of (seed, partitionIndex, row order)
+    val o = graft.Tables.load(spark, "/root/testdata/sf0.001", "orders").select(
+      ((col("o_totalprice") > 250000) =!= (col("o_orderpriority") === "1-URGENT"))
+        .cast("double").as("label"),
+      col("o_totalprice"),
+      (col("o_orderpriority") === "1-URGENT").cast("double").as("is_urgent"),
+      year(col("o_orderdate")).cast("double").as("order_year"),
+      col("o_orderkey"))
+    val pinned = o.localCheckpoint()
+    val h1 = substring(md5(col("o_orderkey").cast("string")), 1, 1)
+    val h2 = substring(md5(col("o_orderkey").cast("string")), 2, 1)
+    val isTest = h1 < lit("5")
+    val feats = Seq("o_totalprice", "is_urgent", "order_year")
+    Seq(25 -> (h2 < lit("4")), 50 -> (h2 < lit("8")), 100 -> lit(true))
+      .foreach { case (pct, gate) =>
+        val a = CohortClassifier.fitTreeSpec(o.where(!isTest && gate),
+          feats, "label", maxDepth = 4)
+        val b = CohortClassifier.fitTreeSpec(pinned.where(!isTest && gate),
+          feats, "label", maxDepth = 4)
+        assert(a == b, s"pct=$pct unpinned $a vs pinned $b")
+      }
+  }
+
   test("literal tree compiles to the expected when-chain semantics") {
     import TreeScorer._
     val tree = SplitLE("a", 1.0, Leaf(0.1), SplitLE("b", 2.0, Leaf(0.2), Leaf(0.3)))
